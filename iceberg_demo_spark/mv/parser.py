@@ -85,12 +85,24 @@ def _split_top_level(s: str, sep: str = ",") -> list[str]:
     return [p.strip() for p in out if p.strip()]
 
 
+_LITERAL_RE = re.compile(r"('(?:[^']|'')*')")
+
+
 def normalize_expr(expr: str, aliases: dict[str, str] | None = None,
                    single_table: str | None = None) -> str:
     """Whitespace/case canonicalization + alias→table qualification; for
     single-table queries, the table qualifier is stripped entirely so that
-    ``sales.amount``, ``s.amount`` and ``amount`` all canonicalize alike."""
-    s = re.sub(r"\s+", " ", expr.strip())
+    ``sales.amount``, ``s.amount`` and ``amount`` all canonicalize alike.
+    String literals pass through verbatim: ``'F'`` and ``'f'`` differ."""
+    parts = _LITERAL_RE.split(expr.strip())
+    # odd indices are the captured '...' literals
+    return "".join(p if i % 2 else _normalize_code(p, aliases, single_table)
+                   for i, p in enumerate(parts))
+
+
+def _normalize_code(s: str, aliases: dict[str, str] | None,
+                    single_table: str | None) -> str:
+    s = re.sub(r"\s+", " ", s)
     s = re.sub(r"\s*([=<>!%*/+,()-])\s*", r"\1", s)
     s = s.lower()
     for a, t in (aliases or {}).items():
@@ -103,14 +115,21 @@ def normalize_expr(expr: str, aliases: dict[str, str] | None = None,
 
 def split_conjuncts(cond: str) -> list[str]:
     """AND-split at top level (AggregateRewriter.scala:330-335 semantics).
-    An OR at top level keeps the predicate as one conjunct."""
-    parts = _split_top_level(cond, " and ")
-    out = []
-    for p in parts:
-        p = p.strip()
+    An OR at top level keeps the predicate as one conjunct, and the AND of
+    ``x BETWEEN a AND b`` stays inside its conjunct."""
+    out: list[str] = []
+    open_between = False
+    for p in _split_top_level(cond, " and "):
+        if open_between:
+            out[-1] += " and " + p
+        else:
+            out.append(p)
+        open_between = (not open_between
+                        and len(_split_top_level(p, " between ")) > 1)
+    for i, p in enumerate(out):
         while p.startswith("(") and p.endswith(")") and _balanced(p[1:-1]):
             p = p[1:-1].strip()
-        out.append(p)
+        out[i] = p
     return out
 
 

@@ -619,11 +619,11 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     # the label frame to a single partition — every iteration's joins,
     # aggregate and convergence count then plan with ZERO exchanges
     # (SinglePartition satisfies every clustered distribution); a graph
-    # that outgrows the threshold keeps the distributed shape untouched
+    # that outgrows the threshold keeps the distributed shape untouched;
+    # with broadcasting off (threshold 0) the edges are never counted
     from iceberg_demo_spark.cache import broadcast_threshold_bytes
-    n_bidir = bidir.count()
-    small = 0 < n_bidir * 64 <= broadcast_threshold_bytes(
-        edges.sparkSession)
+    threshold = broadcast_threshold_bytes(edges.sparkSession)
+    small = threshold > 0 and 0 < bidir.count() * 64 <= threshold
     if small:
         bidir = bidir.coalesce(1)
     labels = (

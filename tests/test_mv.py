@@ -135,6 +135,31 @@ def test_predicate_compensation_on_projection(engine):
                  expect_mv="mv_p", expect_kind="project")
 
 
+def test_predicate_compensation_keeps_literal_case(engine, spark):
+    """A string literal is compared as written: ``status = 'F'`` must not
+    be canonicalized to ``'f'`` when it is compensated over the MV."""
+    spark.createDataFrame(
+        [("F", 10.0), ("O", 20.0), ("F", 5.0), ("f", 1.0)],
+        "status string, amount double",
+    ).createOrReplaceTempView("orders_st")
+    engine.sql("CREATE MATERIALIZED VIEW mv_st AS SELECT status, amount FROM orders_st")
+    _assert_same(engine,
+                 "SELECT status, amount FROM orders_st WHERE status = 'F'",
+                 expect_mv="mv_st", expect_kind="project")
+    engine.sql("DROP MATERIALIZED VIEW mv_st")
+    engine.sql("CREATE MATERIALIZED VIEW mv_st_agg AS SELECT status, SUM(amount) AS total FROM orders_st GROUP BY status")
+    _assert_same(engine,
+                 "SELECT SUM(amount) AS total FROM orders_st WHERE status = 'F'",
+                 expect_mv="mv_st_agg", expect_kind="rollup")
+
+
+def test_split_conjuncts_keeps_between_whole():
+    from iceberg_demo_spark.mv.parser import split_conjuncts
+
+    assert split_conjuncts("x between 1 and 5 and y = 2") == [
+        "x between 1 and 5", "y = 2"]
+
+
 def test_mv_more_restrictive_no_rewrite(engine):
     engine.sql("CREATE MATERIALIZED VIEW mv_r AS SELECT region, product, amount FROM sales WHERE amount > 500")
     res = _assert_same(engine, "SELECT region, amount FROM sales")

@@ -269,6 +269,33 @@ def test_incremental_with_where_filter(engine):
     assert got == {("east", 300.0), ("west", 50.0), ("north", 100.0)}
 
 
+def test_delta_refresh_where_keeps_literal_case(engine):
+    """The view's WHERE filters the changelog as written: ``status = 'F'``
+    must not become ``'f'`` in the DELTA path."""
+    t = engine.catalog.create_table(
+        "db.ord", "status string NOT NULL, amt bigint NOT NULL")
+    rows = "status string, amt bigint"
+    t.append(engine.spark.createDataFrame(
+        [("F", 10), ("O", 20), ("f", 1)], rows))
+    engine.register("db.ord")
+    engine.sql(
+        "CREATE MATERIALIZED VIEW st_mv AS "
+        "SELECT status, sum(amt) AS total, count(*) AS n FROM db_ord "
+        "WHERE status = 'F' GROUP BY status")
+    t.append(engine.spark.createDataFrame(
+        [("F", 5), ("f", 2), ("O", 3)], rows))
+    t.delete_where("amt = 10")
+    engine.sql("REFRESH MATERIALIZED VIEW st_mv DELTA")
+    assert engine.mv.last_refresh_mode == "delta"
+    got = {tuple(r) for r in engine.mv.backing_df(
+        engine.mv_catalog.get("st_mv")).select("status", "total", "n")
+        .collect()}
+    full = {tuple(r) for r in t.scan().filter("status = 'F'")
+            .groupBy("status").agg(F.sum("amt"), F.count(F.lit(1)))
+            .collect()}
+    assert got == full == {("F", 5, 1)}
+
+
 def test_incremental_randomized_matches_full(engine):
     """Randomized DML sequence: after every incremental refresh the backing
     equals a from-scratch recompute."""

@@ -7,7 +7,6 @@ round's operator fixes.
 
 from __future__ import annotations
 
-import json
 import os
 
 import tools.check_coverage as cc
@@ -33,20 +32,22 @@ def test_staleness_projection_flags_violations():
 
 
 def test_repo_satisfies_staleness_slo_and_persists_ledger():
-    probs = cc.check_staleness()
-    assert probs == []
-    ledger = json.load(open(os.path.join(REPO, "GATE_FRESHNESS.json")))
-    assert ledger["slo_rounds"] == cc.SLO_ROUNDS
-    assert len(ledger["window"]) == 50
-    # every registered gate appears in both maps
+    """The computed window meets the SLO and is stalest-first: oldest
+    driver rounds lead, alphabetical within a cohort, and nothing outside
+    the window is staler than anything inside it."""
     from iceberg_demo_spark import registry
+
     registry.load_all()
-    assert set(ledger["last_driver_round"]) == set(registry.QUERIES)
-    assert set(ledger["projected_after_window"]) == set(registry.QUERIES)
-    # the window refreshes every projected-stale gate to current_round
-    cur = ledger["current_round"]
-    for name in ledger["window"]:
-        assert ledger["projected_after_window"][name] == cur
+    assert cc.check_staleness() == []
+    ledger, _ = registry.freshness_ledger(REPO)
+    keys = [(ledger.get(n, 0), n) for n in registry.QUERIES]
+    assert keys == sorted(keys)
+    window = list(registry.QUERIES)[:50]
+    worst_in = max(ledger.get(n, 0) for n in window)
+    best_out = min(ledger.get(n, 0) for n in list(registry.QUERIES)[50:])
+    assert best_out >= worst_in
+    assert list(registry.ORACLES) == [n for n in registry.QUERIES
+                                      if n in registry.ORACLES]
 
 
 def test_artifact_claims_validator_catches_drift():
@@ -383,21 +384,3 @@ def test_curation_incremental_handles_cluster_merge_via_batch_bridge(
     norm = [tuple(int(v) if isinstance(v, (int, float)) and not
                   isinstance(v, bool) else v for v in r) for r in want]
     assert got == norm, (got, norm)
-
-
-def test_plan_next_window_is_stalest_first():
-    """--plan-next recommends never-verified gates first, then oldest
-    driver rounds, alphabetical within cohorts — 50 names, all real."""
-    from iceberg_demo_spark import registry
-
-    registry.load_all()
-    ledger, _ = cc.freshness_ledger()
-    plan = cc.plan_next_window()
-    assert len(plan) == 50 and set(plan) <= set(registry.QUERIES)
-    keys = [(ledger.get(n, 0), n) for n in plan]
-    assert keys == sorted(keys)
-    # nothing outside the plan is staler than anything inside it
-    worst_in = max(ledger.get(n, 0) for n in plan)
-    best_out = min(ledger.get(n, 0)
-                   for n in registry.QUERIES if n not in plan)
-    assert best_out >= worst_in

@@ -1,15 +1,14 @@
 """Round-12 fixes, each pinned to its VERDICT/ADVICE r11 item.
 
-#1 (VERDICT r11 #1): the freshness drift guard must tolerate the
-designed arrives-after-commit state — a driver CORRECTNESS artifact
-always lands AFTER the builder's last commit, so a committed ledger
-that matches the committed-artifact regeneration is "refresh pending"
-(non-failing), while a ledger matching NEITHER regeneration scope is
-genuine desync (hard failure).
+#1 (VERDICT r11 #1): a driver CORRECTNESS artifact always lands AFTER
+the builder's last commit. The window is computed from the artifacts,
+so a newly landed one rotates it with no manual step and the staleness
+SLO holds.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -25,59 +24,30 @@ from iceberg_demo_spark import registry  # noqa: E402
 registry.load_all()
 
 
-def _tmp_repo_with_committed_ledger(tmp_path, monkeypatch):
-    """A tmp repo holding the real committed artifacts + a ledger
-    refreshed over exactly those (the builder's last-commit state)."""
-    committed = sorted(
-        os.path.basename(p)
-        for p in __import__("glob").glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
-    )
-    for base in committed:
-        shutil.copy(os.path.join(REPO, base), tmp_path / base)
-    monkeypatch.setattr(cc, "_REPO", str(tmp_path))
-    monkeypatch.setattr(cc, "_committed_artifacts", lambda: set(committed))
-    cc.check_staleness(write=True)  # ledger == committed-scope regen
-    return set(committed)
-
-
 def test_freshness_tolerates_untracked_driver_artifact(tmp_path, monkeypatch):
-    """Judge-time state: a fresh CORRECTNESS_r{N+1}.json sits untracked
-    on disk. The committed ledger no longer matches the all-artifact
-    regeneration, but DOES match the committed-only one — the check
-    must report zero problems (refresh pending, by design)."""
-    committed = _tmp_repo_with_committed_ledger(tmp_path, monkeypatch)
-    assert cc.check_staleness() == []
-    # the next round's driver artifact lands, untracked: the current
-    # window goes green (exactly what the driver writes)
-    nxt = 1 + max(int(b.split("_r")[1].split(".")[0]) for b in committed)
-    window = list(registry.QUERIES)[:50]
+    """The next round's driver artifact lands next to the package and
+    marks the current window green: the computed window moves to the
+    next-stalest cohort and the SLO check stays clean."""
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        shutil.copy(path, tmp_path)
+    ledger, current = registry.freshness_ledger(str(tmp_path))
+    old = list(registry.QUERIES)[:50]
     fake = {n: {"rows_match": True, "schema_match": True,
-                "hash_match": True} for n in window}
-    (tmp_path / f"CORRECTNESS_r{nxt:02d}.json").write_text(json.dumps(fake))
-    probs = cc.check_staleness()
-    assert probs == [], probs  # refresh pending — non-failing by design
-
-
-def test_freshness_hard_fails_on_genuine_desync(tmp_path, monkeypatch):
-    """A ledger matching NEITHER regeneration scope is real desync and
-    must stay a hard failure."""
-    _tmp_repo_with_committed_ledger(tmp_path, monkeypatch)
-    data = json.loads((tmp_path / "GATE_FRESHNESS.json").read_text())
-    data["current_round"] += 7  # hand-edited / stale ledger
-    (tmp_path / "GATE_FRESHNESS.json").write_text(json.dumps(data))
-    probs = cc.check_staleness()
-    assert any("matches neither" in p for p in probs)
-
-
-def test_committed_artifacts_reflect_git_index():
-    """In the real repo, every CORRECTNESS_r*.json the ledger counts is
-    git-tracked (the driver commits them each round); the helper must
-    agree with `git ls-files`."""
-    tracked = cc._committed_artifacts()
-    assert tracked is not None
-    assert any(b.startswith("CORRECTNESS_r") for b in tracked)
-    for base in tracked:
-        assert os.path.exists(os.path.join(REPO, base))
+                "hash_match": True} for n in old}
+    (tmp_path / f"CORRECTNESS_r{current:02d}.json").write_text(
+        json.dumps(fake))
+    monkeypatch.setattr(registry, "_REPO", str(tmp_path))
+    monkeypatch.setattr(cc, "_REPO", str(tmp_path))
+    try:
+        registry.load_all()
+        new = list(registry.QUERIES)[:50]
+        rest = sorted((n for n in registry.QUERIES if n not in old),
+                      key=lambda n: (ledger.get(n, 0), n))
+        assert new == rest[:50]
+        assert cc.check_staleness() == []
+    finally:
+        monkeypatch.undo()
+        registry.load_all()
 
 
 # -- VERDICT r11 #5: narrowed fallback excepts + recorded reason -------------
