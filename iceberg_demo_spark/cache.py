@@ -17,9 +17,8 @@ has materialized the result. Harnesses rebuild the DataFrame per
 repetition, which keeps that contract trivial.
 
 Sites that manage their own cache lifecycle within one operation (the
-MERGE internals in tables/table.py, the PageRank loop's interior
-iteration caches) keep explicit persist/unpersist pairs; a double
-unpersist on a pinned frame is a harmless no-op.
+MERGE internals in tables/table.py) keep explicit persist/unpersist
+pairs; a double unpersist on a pinned frame is a harmless no-op.
 """
 
 from __future__ import annotations

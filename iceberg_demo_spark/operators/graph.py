@@ -12,45 +12,35 @@ mass sinks would otherwise swallow is redistributed through the teleport
 term each iteration — and the document graph is now DIRECTED
 (first-seen copy → later duplicate), so genuine sinks exist and the
 dangling path is exercised cross-engine, not just in a pytest fixture.
-The loop runs N=10 iterations with a localCheckpoint every 5 to cut
-lineage — the production loop structure the round-7 docstring promised
-(the connected_components pattern, dedup.py).
+The loop runs N=10 iterations, each cut by an eager localCheckpoint.
 
-Scale design: one shuffle per iteration (contributions grouped by dst);
-the rank and node frames are node-sized, the edge frame is persisted
-once and re-joined per iteration; the dangling mass is a 1-row broadcast
-aggregate, never a driver collect, so the loop stays fully distributed.
+Scale design: one shuffle per iteration (the node carry and the edge
+contributions grouped by node in one aggregate); the rank frame is
+node-sized and broadcast into the edge join behind a measured-size
+gate; the edge frame is checkpointed once. The dangling mass is an
+observed metric of each checkpoint job — never a separate job or a
+driver collect of rank data.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_demo_spark.registry import query
-from iceberg_demo_spark.cache import pin as _pin, pin_checkpoint as _pin_ckpt
+from iceberg_demo_spark.cache import (
+    broadcast_threshold_bytes, pin as _pin, pin_checkpoint as _pin_ckpt)
 from iceberg_demo_spark.sources import load_tables
 
 #: fixed-point rank scale — integer "1.0"; floor divisions below make
 #: every iteration bit-exact across engines
 _S = 1_000_000_000
 
-#: iterations / materialization cadence for the gate. Cadence 1 is
-#: measured, not assumed: every iteration's rank frame has TWO consumers
-#: (edge contributions + the dangling-mass sum), and Spark re-executes
-#: shared logical subtrees, so any unmaterialized iteration is recomputed
-#: once per consumer — 2^k work between cuts. At sf0.1: cadence 5 =
-#: 26.3s, cadence 2 = 6.8s, cadence 1 = 6.3s for the 10-iteration gate
-#: under the round-11 plans; re-measured in round 12 after the gated
-#: broadcast landed (cadence 2 = 5.8s, cadence 1 = 5.0s quiet) — the
-#: cut stays at 1. A rank frame with a single consumer could stretch
-#: the cadence; this one cannot.
+#: iterations of the gate
 _N_ITER = 10
-_CKPT_EVERY = 1
 
 
-def integer_pagerank(edges: DataFrame, n_iter: int = _N_ITER,
-                     checkpoint_every: int = _CKPT_EVERY) -> DataFrame:
+def integer_pagerank(edges: DataFrame, n_iter: int = _N_ITER) -> DataFrame:
     """Canonical PageRank over a directed edge frame (``src``, ``dst``)
     in fixed-point bigint arithmetic, damping 0.85:
 
@@ -67,86 +57,63 @@ def integer_pagerank(edges: DataFrame, n_iter: int = _N_ITER,
     N·S − ⌈(E + 2N)/0.15⌉ ≤ Σ rank ≤ N·S — asserted per-iteration in
     tests/test_graph.py.
 
-    Scale shape: ``edges`` is persisted once; each iteration is at most
-    ONE shuffle (contributions grouped by dst) plus node-sized joins; the
-    dangling mass is a 1-row broadcast aggregate (no driver collect).
-    Each rank frame has TWO consumers (contributions + dangling sum) and
-    Spark re-executes shared logical subtrees — a lazy ``persist`` does
-    NOT reliably dedupe the two branches inside one job — so the loop
-    ``localCheckpoint``s (eager) every ``checkpoint_every`` iterations
-    and at the end, making each iteration's work happen exactly once and
-    cutting lineage (the Spark-side twin of the oracle's MATERIALIZED
-    CTEs; see _CKPT_EVERY for the cadence measurements — a persist-based
-    cut was tried in round 12 and rejected: without the lineage cut the
-    logical plan doubles per iteration, two rank references per level,
-    and analysis time explodes). Because the checkpointed rank is a
-    LogicalRDD whose size Catalyst cannot estimate, the node-sized loop
-    frames carry a COUNT-GATED broadcast hint (exact measured n_nodes ×
-    conservative bytes/row vs the session threshold) — adaptive, never
-    forced on an unbounded frame. Interior caches are unpersisted before
-    returning — bounded plan depth, bounded cache."""
-    e = edges.transform(_pin)
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node")))
-             .distinct().transform(_pin))
-    n_nodes = nodes.count()   # materializes e + nodes caches
-    deg = (e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-           .transform(_pin))
-    # Count-GATED broadcast of the node-sized loop frames: each
-    # checkpointed rank frame is a LogicalRDD whose size Catalyst cannot
-    # estimate (default-huge), so without a hint every iteration pays
-    # sort-merge exchanges even on a hundred-node graph. n_nodes is the
-    # EXACT row count of rank/deg/agg forever (all are keyed by node),
-    # so gating the hint on measured rows x a conservative bytes/row
-    # against the session's broadcast threshold is adaptive, never
-    # forced: a graph that outgrows the threshold keeps the shuffled
-    # joins. With the hint, an iteration's only exchange is the
-    # contribution groupBy -- the edge frame itself never shuffles.
-    from iceberg_demo_spark.cache import broadcast_threshold_bytes
+    Scale shape: ``edges`` is localCheckpointed once, so every later
+    analysis sees a leaf instead of the caller's whole lineage. The rank
+    frame carries (node, outdeg, rank) and each iteration is one eager
+    ``localCheckpoint`` over ONE shuffle: every node's own row (share 0,
+    its outdeg) unioned with the edge contributions, grouped by node —
+    the carry rides in the aggregate, so no node-sized join remains.
+    The dangling mass D and the node count N are read with an
+    ``Observation`` on each frame being checkpointed: the metrics ride on
+    the checkpoint job and the next iteration uses ``D div N`` as a
+    literal, so the loop never collects or re-reads a rank frame for a
+    scalar. Per iteration that is three jobs: the rank broadcast, the
+    contribution shuffle, the checkpoint. The checkpointed rank is a
+    LogicalRDD whose size Catalyst cannot estimate, so its broadcast
+    into the edge join is GATED on the observed N × conservative
+    bytes/row against the session threshold — adaptive, never forced on
+    an unbounded frame."""
+    e = edges.transform(_pin_ckpt)
+    # (node, outdeg, S) for every node; outdeg 0 marks a sink
+    rank = (e.select(F.col("src").alias("node"),
+                     F.lit(1).cast("bigint").alias("o"))
+            .union(e.select(F.col("dst").alias("node"),
+                            F.lit(0).cast("bigint").alias("o")))
+            .groupBy("node").agg(F.sum("o").alias("outdeg"))
+            .select("node", "outdeg", F.lit(_S).cast("bigint").alias("rank")))
+    rank, d, n_nodes = _cut(rank)
     small = 0 < n_nodes * 64 <= broadcast_threshold_bytes(e.sparkSession)
-
-    def _bc(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
-
-    # Fold the LOOP-INVARIANT out-degree into the rank frame once
-    # (round 12): the old loop re-joined ``deg`` twice per iteration
-    # (dangling filter + contribution share) — two joins and two
-    # broadcast builds per iteration whose right side never changes.
-    # Carrying (node, outdeg, rank) through the checkpoints makes the
-    # dangling sum a join-free filter+aggregate and the contribution
-    # share a plain column expression; per-iteration cost drops to one
-    # edge join + the contribution groupBy + the node-keyed carry join.
-    ndeg = (nodes.join(_bc(deg), nodes.node == deg.src, "left")
-            .select("node", "outdeg").transform(_pin))
-    rank = ndeg.select("node", "outdeg",
-                       F.lit(_S).cast("bigint").alias("rank"))
-    cached: list[DataFrame] = []
-    for i in range(n_iter):
-        dang = (rank.filter(F.col("outdeg").isNull())
-                .agg(F.coalesce(F.sum("rank"), F.lit(0))
-                     .cast("bigint").alias("d")))
-        contrib = (e.join(_bc(rank), e.src == rank.node)
-                   .select("dst", F.expr("rank div outdeg").alias("share")))
-        agg = (contrib.groupBy(F.col("dst").alias("node"))
-               .agg(F.sum("share").cast("bigint").alias("s")))
-        rank = (ndeg.join(_bc(agg), "node", "left")
-                .crossJoin(F.broadcast(dang))
+    for _ in range(n_iter):
+        r = F.broadcast(rank) if small else rank
+        contrib = (e.join(r, e.src == r.node)
+                   .select(F.col("dst").alias("node"),
+                           F.expr("rank div outdeg").alias("share"),
+                           F.lit(0).cast("bigint").alias("outdeg")))
+        own = rank.select("node", F.lit(0).cast("bigint").alias("share"),
+                          "outdeg")
+        dsh = d // max(n_nodes, 1)
+        rank = (own.union(contrib).groupBy("node")
+                .agg(F.sum("share").cast("bigint").alias("s"),
+                     F.max("outdeg").alias("outdeg"))
                 .select("node", "outdeg",
                         (F.lit(15 * _S // 100)
-                         + F.expr(f"(85 * (coalesce(s, CAST(0 AS BIGINT))"
-                                  f" + d div {n_nodes})) div 100"))
+                         + F.expr(f"(85 * (s + {dsh}L)) div 100"))
                         .cast("bigint").alias("rank")))
-        if (i + 1) % checkpoint_every == 0 or (i + 1) == n_iter:
-            rank = rank.transform(_pin_ckpt)  # eager: cut lineage here
-            for c in cached:
-                c.unpersist()
-            cached.clear()
-        else:
-            rank = rank.transform(_pin)
-            cached.append(rank)
-    for c in (e, nodes, deg, ndeg):
-        c.unpersist()
+        rank, d, _ = _cut(rank)
     return rank.select("node", "rank")
+
+
+def _cut(rank: DataFrame) -> tuple[DataFrame, int, int]:
+    """Eager localCheckpoint of a rank frame that observes, in the same
+    job, its dangling mass D and node count N: (frame, D, N)."""
+    obs = Observation()
+    rank = rank.observe(
+        obs,
+        F.coalesce(F.sum(F.when(F.col("outdeg") == 0, F.col("rank"))),
+                   F.lit(0)).cast("bigint").alias("d"),
+        F.count(F.lit(1)).alias("n")).transform(_pin_ckpt)
+    got = obs.get  # only after the checkpoint job has returned
+    return rank, got["d"], got["n"]
 
 
 def _pagerank_sql_iterations(n_iter: int) -> str:
@@ -222,13 +189,11 @@ def graph_doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the edge list is built once from the distinct
     (doc_id, wh) frame (digest-keyed self-join, per-key fan-out bounded
-    by window repetition) and persisted; each of the 10 iterations is
-    ONE shuffle, the dangling mass a 1-row broadcast aggregate, and an
-    eager localCheckpoint per iteration cuts the lineage — required,
-    not optional, because the rank frame is consumed twice (cadence
-    measurements at _CKPT_EVERY); the loop structure a production
-    100-iteration run keeps verbatim. Isolated
-    documents never enter the edge frame and are excluded, matching the
+    by window repetition) and checkpointed; each of the 10 iterations
+    is ONE shuffle, a rank broadcast and the eager localCheckpoint whose
+    job also observes the dangling mass — three jobs, the loop structure
+    a production 100-iteration run keeps verbatim. Isolated documents
+    never enter the edge frame and are excluded, matching the
     oracle."""
     t = load_tables(spark, sf_dir, ("documents",))
     from iceberg_demo_spark.operators.dedup import _ingest_windows

@@ -115,8 +115,17 @@ def cached_parquet(spark, root: str, name: str):
     df = _PARQUET_HANDLES.get(key)
     if df is None:
         df = spark.read.parquet(full)
-        _PARQUET_HANDLES[key] = df
+        _insert_fresh(_PARQUET_HANDLES, key, df)
     return df
+
+
+def _insert_fresh(cache: dict, key: tuple[str, str, int], value) -> None:
+    """Insert under ``key`` and drop every older-mtime key of the same
+    (application, path): a rebuilt index makes them unreachable, so
+    without eviction each rebuild leaks one handle."""
+    for k in [k for k in list(cache) if k[:2] == key[:2]]:
+        cache.pop(k, None)
+    cache[key] = value
 
 
 #: (application id, artifact dir, manifest mtime_ns) → first Row
@@ -137,5 +146,6 @@ def cached_parquet_first(spark, root: str, name: str):
         return spark.read.parquet(full).first()
     key = (spark.sparkContext.applicationId, full, mtime)
     if key not in _FIRST_ROWS:
-        _FIRST_ROWS[key] = cached_parquet(spark, root, name).first()
+        _insert_fresh(_FIRST_ROWS, key,
+                      cached_parquet(spark, root, name).first())
     return _FIRST_ROWS[key]

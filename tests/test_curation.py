@@ -727,3 +727,26 @@ def test_code_covariance_matches_numpy(spark):
         if prev is not None:
             assert abs(r["cov_num"]) <= prev  # ranked by |cov|
         prev = abs(r["cov_num"])
+
+
+def test_scratch_handles_keep_one_entry_per_path(spark, tmp_path):
+    """Rewriting an index's source manifest re-keys its cached handle
+    and first row; the entries under the older manifest mtime are
+    evicted, so each (application, path) holds one entry."""
+    import os
+
+    from iceberg_demo_spark import scratch
+
+    root = str(tmp_path)
+    spark.createDataFrame([(1, 2)], "a long, b long").write.parquet(
+        os.path.join(root, "geom"))
+    manifest = os.path.join(root, scratch._MANIFEST)
+    full = os.path.join(root, "geom")
+    for step in range(3):
+        with open(manifest, "w") as fh:
+            fh.write("{}")
+        os.utime(manifest, ns=(step * 10**9, step * 10**9))
+        assert scratch.cached_parquet_first(spark, root, "geom")["b"] == 2
+        for cache in (scratch._PARQUET_HANDLES, scratch._FIRST_ROWS):
+            keys = [k for k in cache if k[1] == full]
+            assert len(keys) == 1 and keys[0][2] == step * 10**9, keys

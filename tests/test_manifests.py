@@ -225,8 +225,10 @@ def test_scan_where_skips_whole_manifests(catalog, monkeypatch):
         [(i, "x") for i in range(40)], schema=t.schema())
     b = catalog.spark.createDataFrame(
         [(i, "y") for i in range(40, 80)], schema=t.schema())
-    t.append(a)
-    t.append(b)
+    # eight files per append, so the two appends pass manifest-min-files
+    # on any core count
+    t.append(a.repartition(8))
+    t.append(b.repartition(8))
 
     m = TableMetadata.load(t.location)
     snap = m.current_snapshot()

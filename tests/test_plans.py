@@ -971,3 +971,38 @@ def test_bm25_compacted_probe_still_partition_pruned(spark):
     assert _re.search(
         r"PartitionFilters: \[tok_bucket#\d+ IN", plan), plan[:400]
     assert "CartesianProduct" not in plan
+
+
+def test_connected_components_small_graph_iterations_never_shuffle(
+        spark, monkeypatch):
+    """connected_components under the small-graph gate: the collapsed
+    single-partition edge and label frames satisfy every join, aggregate
+    and convergence-count distribution, so no iteration plans a shuffle
+    Exchange (broadcast exchanges are not shuffles). Plans are taken
+    from each iteration's pinned label frame and convergence count."""
+    import re
+
+    from iceberg_demo_spark.operators import dedup
+
+    plans: list[str] = []
+
+    def spy(real):
+        def wrapped(df):
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+            return real(df)
+        return wrapped
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (4, 5)],
+                                  "id_a long, id_b long")
+    monkeypatch.setattr(dedup, "_pin", spy(dedup._pin))
+    monkeypatch.setattr(type(edges), "count", spy(type(edges).count))
+    got = {r["id"]: r["cluster_root"]
+           for r in dedup.connected_components(edges).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
+    # bidir pin, the gate's bidir count and the initial labels pin come
+    # first; then a label pin and a convergence count per iteration (the
+    # 1-2-3 chain needs three)
+    iterations = plans[3:]
+    assert len(iterations) == 6, len(plans)
+    for plan in iterations:
+        assert not re.search(r"(?<!Broadcast)Exchange", plan), plan

@@ -4,12 +4,14 @@ The r12 quiet artifact carried canary-inconsistent outliers because a
 single recording window can absorb transient contention that the
 within-window canary misses. This tool makes before/after measurement
 of an optimization ROBUST by interleaving: it checks out the BEFORE
-revision into a throwaway git worktree (sharing /tmp scratch indices,
-so state builds are warm for both sides), then alternates fresh
+revision into a throwaway git worktree, then alternates fresh
 bench.py processes A,B,B,A,A,B,... over the requested gates, and
 reports per-gate min/median per side plus the ratio. Host drift hits
 both sides of every adjacent pair, so a consistent ratio is code, not
-host.
+host. Each side runs with its own ``TMPDIR``, so its own
+``scratch_dir()`` root: one revision never reads state indices the
+other built (they stay warm across that side's own runs and are
+deleted at the end).
 
 Usage:
     python tools/ab_bench.py --before HEAD~1 \
@@ -21,16 +23,19 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run_subset(repo: str, gates: list[str], reps: int) -> dict[str, float]:
-    env = dict(os.environ,
+def run_subset(repo: str, gates: list[str], reps: int,
+               tmpdir: str) -> dict[str, float]:
+    env = dict(os.environ, TMPDIR=tmpdir,
                SPARK_GRAFT_BENCH_ONLY=",".join(gates),
                SPARK_GRAFT_BENCH_REPS=str(reps))
     proc = subprocess.run([sys.executable, os.path.join(repo, "bench.py")],
@@ -65,6 +70,8 @@ def main() -> int:
     if r.returncode != 0:
         sys.stderr.write(r.stderr)
         return 1
+    tmpdirs = {side: tempfile.mkdtemp(prefix=f"ab_bench_{side}_")
+               for side in ("before", "after")}
     try:
         before_runs: list[dict] = []
         after_runs: list[dict] = []
@@ -75,7 +82,7 @@ def main() -> int:
                 order.reverse()
             for side, repo in order:
                 t0 = time.time()
-                q = run_subset(repo, gates, args.reps)
+                q = run_subset(repo, gates, args.reps, tmpdirs[side])
                 (before_runs if side == "before" else after_runs).append(q)
                 print(f"# pair {pair + 1} {side}: "
                       + " ".join(f"{g}={q.get(g)}" for g in gates)
@@ -106,6 +113,8 @@ def main() -> int:
                 fh.write("\n")
         return 0
     finally:
+        for d in tmpdirs.values():
+            shutil.rmtree(d, ignore_errors=True)
         subprocess.run(["git", "worktree", "remove", "--force",
                         args.worktree], cwd=REPO, capture_output=True)
 
